@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from driftspark.session import get_spark
+
 
 def hive_enabled_session(
     warehouse_dir: str,
@@ -28,25 +30,22 @@ def hive_enabled_session(
     shuffle_partitions: int = 32,
     app_name: str = "driftspark-bucketed",
 ) -> SparkSession:
-    """Session with a Hive catalog (required for bucketed saveAsTable).
+    """Session with a Hive catalog (required for bucketed saveAsTable),
+    built by ``session.get_spark`` so it carries the same defaults.
 
     Must be the FIRST session in the JVM — catalogImplementation is fixed
     at context creation."""
-    return (
-        SparkSession.builder.master(master)
-        .appName(app_name)
-        .config("spark.sql.warehouse.dir", f"{warehouse_dir}/warehouse")
-        .config("spark.sql.catalogImplementation", "hive")
-        .config(
-            "javax.jdo.option.ConnectionURL",
-            f"jdbc:derby:;databaseName={warehouse_dir}/metastore_db;create=true",
-        )
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .enableHiveSupport()
-        .getOrCreate()
+    return get_spark(
+        app_name=app_name,
+        master=master,
+        shuffle_partitions=shuffle_partitions,
+        extra_conf={
+            "spark.sql.catalogImplementation": "hive",
+            "spark.sql.warehouse.dir": f"{warehouse_dir}/warehouse",
+            "javax.jdo.option.ConnectionURL": (
+                f"jdbc:derby:;databaseName={warehouse_dir}/metastore_db;create=true"
+            ),
+        },
     )
 
 

@@ -19,6 +19,12 @@ def get_spark(
     - AQE on (runtime coalescing + skew-join splitting for the constraint
       joins, SURVEY.md §2.3 J4/J5);
     - Arrow on for every pandas-UDF boundary (no per-row Python anywhere);
+    - codegen cache sized for repeated passes: one ``run_validation`` pass
+      plans about 190 distinct generated classes and one drift-suite pass
+      about 220, so Spark's default of 100 entries evicts each pass's
+      classes before the next pass asks for them and every pass
+      Janino-compiles (and JIT-warms) identical plans again; 2000 entries
+      keep them all and a warm pass compiles nothing;
     - shuffle partitions sized to the local core count in the sandbox; on a
       real cluster pass ``shuffle_partitions`` ~ 2-3x total executor cores.
     """
@@ -38,6 +44,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

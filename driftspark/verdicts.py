@@ -170,7 +170,14 @@ def psi_by_partition(
         .join(test_cnt, ["part", "feature", "bin"], "left")
         .na.fill({"r": 0, "t": 0})
     )
-    w = Window.partitionBy("part", "feature")
+    # every double sum below runs in bin order: an unordered window or a
+    # hash aggregate adds in shuffle-arrival order, which moves the last
+    # bits of the PSI from run to run and from one input layout to another
+    w = (
+        Window.partitionBy("part", "feature")
+        .orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
     rsum = F.sum("r").over(w)
     tsum = F.sum("t").over(w)
     # try_divide: a partition whose values are ALL out-of-range/NULL for a
@@ -187,6 +194,7 @@ def psi_by_partition(
     scored = j.select(
         "part",
         "feature",
+        "bin",
         e.alias("e"),
         a.alias("a"),
         F.sum(e).over(w).alias("esum"),
@@ -196,10 +204,11 @@ def psi_by_partition(
     )
     en = F.col("e") / F.col("esum")
     an = F.col("a") / F.col("asum")
-    return scored.groupBy("part", "feature").agg(
-        F.sum((an - en) * F.log(an / en)).alias("psi"),
-        F.first("n_ref").alias("n_ref"),
-        F.first("n_test").alias("n_test"),
+    # the dense grid gives every (part, feature) a bin 0: keep that row
+    return (
+        scored.withColumn("psi", F.sum((an - en) * F.log(an / en)).over(w))
+        .where(F.col("bin") == 0)
+        .select("part", "feature", "psi", "n_ref", "n_test")
     )
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from driftspark import SparkDataset  # noqa: E402
 from driftspark.detectors.hallucination import HallucinationRiskDetector  # noqa: E402
+from driftspark.session import get_spark  # noqa: E402
 
 N_REF, N_IN, N_OOD = 400, 200, 100
 N_FEATURES = 5
@@ -64,11 +65,8 @@ def _make_frames():
 def main(spark: SparkSession | None = None) -> dict:
     own_session = spark is None
     if own_session:
-        spark = (
-            SparkSession.builder.master("local[4]")
-            .appName("hallucination-quickstart")
-            .config("spark.sql.shuffle.partitions", "8")
-            .getOrCreate()
+        spark = get_spark(
+            app_name="hallucination-quickstart", master="local[4]", shuffle_partitions=8
         )
         spark.sparkContext.setLogLevel("ERROR")
 

@@ -25,6 +25,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from driftspark import DriftPipeline, SparkDataset  # noqa: E402
 from driftspark.detectors.ks import KSTest  # noqa: E402
+from driftspark.session import get_spark  # noqa: E402
 
 N_ROWS, N_FEATURES = 1000, 5
 MEAN_SHIFT = 0.5  # applied to every test feature (reference demo line 24)
@@ -38,11 +39,8 @@ def _frame(spark: SparkSession, arr: np.ndarray) -> SparkDataset:
 def main(spark: SparkSession | None = None):
     own_session = spark is None
     if own_session:
-        spark = (
-            SparkSession.builder.master("local[4]")
-            .appName("driftspark-simple-example")
-            .config("spark.sql.shuffle.partitions", "8")
-            .getOrCreate()
+        spark = get_spark(
+            app_name="driftspark-simple-example", master="local[4]", shuffle_partitions=8
         )
     try:
         print("Simple Drift Detection Example")
