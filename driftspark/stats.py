@@ -20,17 +20,17 @@ Semantics parity notes (reference = /root/reference/src/drift_autopsy):
   the exact ``np.linspace`` doubles as cutoffs.
 * KS D == the max |ECDF_ref - ECDF_test| over pooled sample points, i.e.
   exactly scipy.stats.ks_2samp's statistic: computed distributed via
-  per-value pre-aggregation + a per-feature cumulative window (§2.4 A10 in
-  SURVEY.md).  The groupBy(feature, value) partial aggregation shrinks the
-  window input to distinct values, so the single-reducer-per-feature window
-  only ever sees the value domain, not the row count.
+  per-value pre-aggregation + bucket-parallel cumulative windows (§2.4 A10
+  in SURVEY.md).  The groupBy(feature, value) partial aggregation shrinks
+  the window input to distinct values; KS, W1 and CvM/AD are reducers over
+  the one exact cumulative frame (:func:`_cdf_cum_frame`).
 """
 
 from __future__ import annotations
 
 import logging
 import math
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import Callable, Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
@@ -406,8 +406,11 @@ def categorical_proportions(
 # ---------------------------------------------------------------------------
 
 
-def _melt(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """(feature, value) long form; NaN/null dropped (pandas dropna parity).
+def _melt(
+    df: DataFrame, cols: Sequence[str], part_col: Optional[str] = None
+) -> DataFrame:
+    """(feature, value) long form — (part, feature, value) when
+    ``part_col`` is given; NaN/null values dropped (pandas dropna parity).
 
     Deliberately NOT spread_input-guarded: an interleaved A/B at sf0.1
     showed the extra round-robin exchange costs more than the explode
@@ -418,9 +421,10 @@ def _melt(df: DataFrame, cols: Sequence[str]) -> DataFrame:
         F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
         for c in cols
     ]
+    sel = [F.col(part_col).alias("part")] if part_col else []
     return (
-        df.select(F.explode(F.array(*structs)).alias("fv"))
-        .select("fv.feature", "fv.value")
+        df.select(*sel, F.explode(F.array(*structs)).alias("fv"))
+        .select(*(["part"] if part_col else []), "fv.feature", "fv.value")
         .where(F.col("value").isNotNull() & ~F.isnan("value"))
     )
 
@@ -443,13 +447,13 @@ def _cdf_prescan(
 
     ``n``/``m`` are the EXACT per-side non-null non-NaN counts (the same
     rows :func:`_melt` keeps, so they are the KS/W1/CvM sample sizes);
-    ``lo``/``hi`` the pooled exact min/max (uniform bucket bounds for the
-    fused path — bucket PLACEMENT affects only load balance, never the
+    ``lo``/``hi`` the pooled exact min/max (:func:`_uniform_bucket`
+    bounds — bucket PLACEMENT affects only load balance, never the
     statistic); ``nd_approx`` a distinct-count bound used solely to route
-    to the percentile-bucketed decomposition and to size the bucket
-    count.  This replaces the former build-then-count totals pass over
-    the persisted melt aggregate: the routing signal no longer costs a
-    full explode + (feature, value) shuffle + cache materialization.
+    a feature to approx-quantile buckets and to size the bucket count.
+    This replaces the former build-then-count totals pass over the
+    persisted melt aggregate: the routing signal no longer costs a full
+    explode + (feature, value) shuffle + cache materialization.
 
     The HLL distinct sketch only matters when a feature COULD exceed
     ``bucketed_threshold`` — and nd <= n + m always, so when every
@@ -504,60 +508,13 @@ def _cdf_prescan(
     return out
 
 
-def _cdf_route(
-    fn_name: str,
-    prescan: Dict[str, tuple],
-    bucketed_threshold: int,
-) -> Tuple[Dict[str, Tuple[int, int]], list, list]:
-    """(nm, fused_features, percentile_features) from the prescan: drops
-    one-sided-empty features with the KS-convention warning, and routes
-    features whose approximate distinct count exceeds
-    ``bucketed_threshold`` to the equal-mass percentile decomposition
-    (robust to value-skew at the scale where uniform buckets could leave
-    one bucket hot).  Either route is exact — the statistics are
-    bucket-layout-invariant by construction — so the approximate routing
-    signal cannot change a result."""
-    nm = {c: (v[0], v[1]) for c, v in prescan.items()}
-    degenerate = [c for c, (n, m) in nm.items() if n == 0 or m == 0]
-    if degenerate:
-        logger.warning(
-            "%s: no non-null values on one side for %s — skipped",
-            fn_name, sorted(degenerate),
-        )
-    ok = [c for c in prescan if c not in set(degenerate)]
-    fused = [c for c in ok if prescan[c][4] <= bucketed_threshold]
-    big = [c for c in ok if prescan[c][4] > bucketed_threshold]
-    return nm, fused, big
-
-
-def _cdf_cum_frame(
-    g: DataFrame,
-    prescan: Dict[str, tuple],
-    feats: Sequence[str],
-    with_gap: bool = False,
-) -> DataFrame:
-    """The fused exact-cumulative frame over the per-value counts ``g``:
-    one action computes, for every (feature, value), the exact global
-    cumulative side counts and side totals — with the per-feature
-    cumulative window split into value-ordered UNIFORM buckets so the
-    sort/window/term work runs bucket-parallel instead of one task per
-    feature.
-
-    Shape: bucket id = floor((value - lo) / (hi - lo) * nb) (a flat
-    arithmetic expression from the prescan bounds — deterministic and
-    order-preserving, so within-bucket running sums + exact cross-bucket
-    prefix offsets reconstruct the EXACT global cumulative counts) →
-    running window per (feature, bkt) → the per-bucket totals aggregate
-    re-reads the same shuffled exchange (ReuseExchange; the offsets frame
-    is O(features x buckets) and broadcasts) → prefix offsets, per-feature
-    totals (and, for W1, the next non-empty bucket's minimum — the
-    boundary gap) come from tiny windows over that aggregate.
-
-    Returns columns: feature, value, r, t, cr, ct, n, m (+ nxt when
-    ``with_gap`` — NULL at the last distinct value of a feature).
-    Uniform buckets are a LOAD-BALANCE choice only; any deterministic
-    monotone bucketing yields identical statistics (locked by the
-    layout/bucketed bit-parity tests)."""
+def _uniform_bucket(prescan: Dict[str, tuple], feats: Sequence[str]) -> Column:
+    """Uniform value buckets from the prescan bounds: bucket id =
+    floor((value - lo) / (hi - lo) * nb), with nb sized to about
+    ``_CDF_ROWS_PER_BUCKET`` distinct values per bucket (at most
+    ``_CDF_MAX_BUCKETS``) — a flat arithmetic expression, deterministic
+    and order-preserving.  A feature with one bucket, or with a
+    non-finite or empty [lo, hi], gets bucket 0."""
     bucket = F.lit(0)
     for c in feats:
         n, m, lo, hi, nd = prescan[c]
@@ -582,6 +539,74 @@ def _cdf_cum_frame(
         else:
             bc = F.lit(0)
         bucket = F.when(F.col("feature") == c, bc).otherwise(bucket)
+    return bucket
+
+
+def _quantile_bucket(
+    g: DataFrame,
+    feats: Sequence[str],
+    n_buckets: int,
+    base: Optional[Column] = None,
+) -> Column:
+    """Equal-mass value buckets for ``feats`` of a (feature, value, ...)
+    frame: ONE ``percentile_approx`` job fetches ``n_buckets - 1`` edges
+    per feature, and a value's bucket id is the number of edges strictly
+    below it.  Robust to value skew — an outlier-stretched domain, where
+    uniform buckets put almost every value in bucket 0.  Features not in
+    ``feats`` keep ``base`` (bucket 0 by default).  This is the one place
+    approx-quantile bucket edges are computed."""
+    bucket = F.lit(0) if base is None else base
+    if not feats:
+        return bucket
+    probs = [i / n_buckets for i in range(1, n_buckets)]
+    edge_rows = (
+        g.where(F.col("feature").isin(list(feats)))
+        .groupBy("feature")
+        .agg(
+            F.percentile_approx(
+                "value", F.array(*[F.lit(p) for p in probs]), 10_000
+            ).alias("edges")
+        )
+        .collect()
+    )
+    for r in edge_rows:
+        b = F.lit(0)
+        for e in r["edges"]:
+            b = b + (F.col("value") > F.lit(float(e))).cast("int")
+        bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
+    return bucket
+
+
+def _cdf_cum_frame(
+    g: DataFrame,
+    bucket: Column,
+    with_gap: bool = False,
+) -> DataFrame:
+    """The exact cumulative frame over the per-value counts ``g``
+    (feature, value, r, t): one action computes, for every (feature,
+    value), the exact global cumulative side counts and side totals —
+    with the per-feature cumulative window split into the value-ordered
+    buckets of ``bucket`` so the sort/window/term work runs
+    bucket-parallel instead of one task per feature.  Every prefix count
+    over value-sorted rows in the engine's global statistics and the
+    broadcast-ECDF thinning comes from here.
+
+    ``bucket`` is any deterministic bucket id that is monotone in value
+    within a feature (:func:`_uniform_bucket`, :func:`_quantile_bucket`),
+    so within-bucket running sums + exact cross-bucket prefix offsets
+    reconstruct the EXACT global cumulative counts.  Shape: running
+    window per (feature, bkt) → the per-bucket totals aggregate re-reads
+    the same shuffled exchange (ReuseExchange; the offsets frame is
+    O(features x buckets) and broadcasts) → prefix offsets, per-feature
+    totals (and, for W1, the next non-empty bucket's minimum — the
+    boundary gap) come from tiny windows over that aggregate, in the
+    plan; nothing is collected to the driver.
+
+    Returns columns: feature, value, r, t, cr, ct, n, m (+ nxt when
+    ``with_gap`` — NULL at the last distinct value of a feature).
+    Buckets are a LOAD-BALANCE choice only; any such bucketing yields
+    identical statistics (locked by the layout/bucketed bit-parity
+    tests)."""
     gb = g.withColumn("bkt", bucket)
 
     bt_aggs = [F.sum("r").alias("rs"), F.sum("t").alias("ts")]
@@ -638,6 +663,67 @@ def _cdf_cum_frame(
     return pre.join(F.broadcast(offs), ["feature", "bkt"]).select(*sel)
 
 
+def _cdf_stat_rows(
+    fn_name: str,
+    ref_df: DataFrame,
+    test_df: DataFrame,
+    cols: Sequence[str],
+    bucketed_threshold: int,
+    n_buckets: int,
+    reduce: Callable[[DataFrame], DataFrame],
+    with_gap: bool = False,
+) -> Tuple[Dict[str, Tuple[int, int]], List[str], list]:
+    """The shared plan of the CDF-family statistics: ONE light prescan
+    (:func:`_cdf_prescan`; no explode, no shuffle) for sample sizes and
+    routing, then ONE fused job: melt both sides → union →
+    groupBy(feature, value) pre-aggregated side counts (partial agg
+    map-side; the shuffle carries only distinct values) →
+    :func:`_cdf_cum_frame` → ``reduce(frame)``, collected.
+
+    Features with no non-null values on one side are skipped with a
+    warning (KS convention).  Features whose approximate distinct count
+    exceeds ``bucketed_threshold`` get ``n_buckets`` approx-quantile
+    buckets instead of uniform ones (one extra edge job; the value counts
+    are persisted across it).  Either bucketing is exact, so the
+    approximate routing signal cannot change a result.
+
+    Returns (nm, ok, rows): {feature: (n, m)}, the scored features, and
+    the collected reducer rows."""
+    if not cols:
+        return {}, [], []
+    prescan = _cdf_prescan(ref_df, test_df, cols, bucketed_threshold)
+    nm = {c: (v[0], v[1]) for c, v in prescan.items()}
+    degenerate = [c for c, (n, m) in nm.items() if n == 0 or m == 0]
+    if degenerate:
+        logger.warning(
+            "%s: no non-null values on one side for %s — skipped",
+            fn_name, sorted(degenerate),
+        )
+    ok = [c for c in prescan if c not in set(degenerate)]
+    if not ok:
+        return nm, ok, []
+    fused = [c for c in ok if prescan[c][4] <= bucketed_threshold]
+    big = [c for c in ok if prescan[c][4] > bucketed_threshold]
+    u = _melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)).unionByName(
+        _melt(test_df, cols).withColumn("r", F.lit(0)).withColumn("t", F.lit(1))
+    )
+    g = u.groupBy("feature", "value").agg(
+        F.sum("r").alias("r"), F.sum("t").alias("t")
+    )
+    if big:
+        # the edge job and the frame both read g — persist it
+        g = g.persist()
+    try:
+        bucket = _quantile_bucket(g, big, n_buckets, _uniform_bucket(prescan, fused))
+        cum = _cdf_cum_frame(
+            g.where(F.col("feature").isin(ok)), bucket, with_gap
+        )
+        return nm, ok, reduce(cum).collect()
+    finally:
+        if big:
+            g.unpersist()
+
+
 def ks_d_all(
     ref_df: DataFrame,
     test_df: DataFrame,
@@ -645,131 +731,26 @@ def ks_d_all(
     bucketed_threshold: int = 4_000_000,
     n_buckets: int = 64,
 ) -> Dict[str, Tuple[float, int, int]]:
-    """Exact KS D per feature, fully distributed.
-
-    Plan: ONE light prescan (per-column counts/min/max/HLL — no explode,
-    no shuffle) for sample sizes and routing, then ONE fused job: melt
-    both sides → union → groupBy(feature, value) pre-aggregate side
-    counts (partial agg map-side) → bucket-parallel cumulative windows
-    (:func:`_cdf_cum_frame`) → max |cdf_ref - cdf_test|.  D is attained
-    at sample points, and the cumulative count at a distinct value equals
-    searchsorted(..., side='right'), so this is exactly scipy's
-    statistic.
+    """Exact KS D per feature, fully distributed: max |cdf_ref - cdf_test|
+    over the exact cumulative frame (:func:`_cdf_stat_rows`).  D is
+    attained at sample points, and the cumulative count at a distinct
+    value equals searchsorted(..., side='right'), so this is exactly
+    scipy's statistic.
 
     Features whose approximate distinct count exceeds
-    ``bucketed_threshold`` switch to the equal-mass percentile
-    decomposition (:func:`_ks_d_bucketed`) — same exact D, robust to
-    value-skew where the fused path's uniform buckets could run hot.
+    ``bucketed_threshold`` use ``n_buckets`` approx-quantile buckets —
+    the same frame and reducer, so the same exact D, robust to
+    value-skew where uniform buckets could run hot.
 
     Returns {feature: (d, n_ref, m_test)}.
     """
-    if not cols:
-        return {}
-    prescan = _cdf_prescan(ref_df, test_df, cols, bucketed_threshold)
-    nm, fused, big = _cdf_route("ks_d_all", prescan, bucketed_threshold)
-    if not fused and not big:
-        return {}
-    u = _melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)).unionByName(
-        _melt(test_df, cols).withColumn("r", F.lit(0)).withColumn("t", F.lit(1))
-    )
-    g = u.groupBy("feature", "value").agg(
-        F.sum("r").alias("r"), F.sum("t").alias("t")
-    )
-    out: Dict[str, Tuple[float, int, int]] = {}
-    if big:
-        # the percentile path runs 3 actions over g — persist it
-        g = g.persist()
-    try:
-        if fused:
-            cum = _cdf_cum_frame(
-                g.where(F.col("feature").isin(fused)), prescan, fused
-            )
-            scored = cum.select(
-                "feature",
-                F.abs(
-                    F.col("cr") / F.col("n") - F.col("ct") / F.col("m")
-                ).alias("diff"),
-            )
-            rows = scored.groupBy("feature").agg(F.max("diff").alias("d")).collect()
-            out.update(
-                {r["feature"]: (float(r["d"]), *nm[r["feature"]]) for r in rows}
-            )
-        if big:
-            out.update(
-                _ks_d_bucketed(g.where(F.col("feature").isin(big)), nm, n_buckets)
-            )
-        return out
-    finally:
-        if big:
-            g.unpersist()
-
-
-def _ks_d_bucketed(
-    g: DataFrame, nm: Dict[str, Tuple[int, int]], n_buckets: int
-) -> Dict:
-    """Exact D via coarse value-buckets: within-bucket cumulative windows
-    run ``n_buckets``-way parallel per feature; exact prefix offsets of
-    earlier buckets are added through a broadcast join."""
-    import pandas as pd
-
-    spark = g.sparkSession
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    edge_rows = g.groupBy("feature").agg(
-        F.percentile_approx(
-            "value", F.array(*[F.lit(p) for p in probs]), 10_000
-        ).alias("edges")
-    ).collect()
-    bucket = F.lit(0)
-    for r in edge_rows:
-        b = F.lit(0)
-        for e in r["edges"]:
-            b = b + (F.col("value") > F.lit(float(e))).cast("int")
-        bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
-    bucketed = g.withColumn("bkt", bucket)
-
-    offs_rows = bucketed.groupBy("feature", "bkt").agg(
-        F.sum("r").alias("rs"), F.sum("t").alias("ts")
-    ).collect()
-    per_feat: Dict[str, list] = {}
-    for r in offs_rows:
-        per_feat.setdefault(r["feature"], []).append(r)
-    offs = []
-    for feat, rows in per_feat.items():
-        roff = toff = 0
-        for r in sorted(rows, key=lambda x: x["bkt"]):
-            offs.append((feat, int(r["bkt"]), roff, toff))
-            roff += int(r["rs"])
-            toff += int(r["ts"])
-    offs_df = spark.createDataFrame(
-        pd.DataFrame(offs, columns=["feature", "bkt", "roff", "toff"])
-    )
-    nm_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(f, n, m) for f, (n, m) in nm.items()], columns=["feature", "n", "m"]
-        )
-    )
-    w_cum = (
-        Window.partitionBy("feature", "bkt")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    scored = (
-        bucketed.select(
-            "feature", "bkt",
-            F.sum("r").over(w_cum).alias("lcr"),
-            F.sum("t").over(w_cum).alias("lct"),
-        )
-        .join(F.broadcast(offs_df), ["feature", "bkt"])
-        .join(F.broadcast(nm_df), "feature")
-        .select(
+    nm, _, rows = _cdf_stat_rows(
+        "ks_d_all", ref_df, test_df, cols, bucketed_threshold, n_buckets,
+        lambda cum: cum.select(
             "feature",
-            F.abs(
-                (F.col("lcr") + F.col("roff")) / F.col("n")
-                - (F.col("lct") + F.col("toff")) / F.col("m")
-            ).alias("diff"),
-        )
+            F.abs(F.col("cr") / F.col("n") - F.col("ct") / F.col("m")).alias("diff"),
+        ).groupBy("feature").agg(F.max("diff").alias("d")),
     )
-    rows = scored.groupBy("feature").agg(F.max("diff").alias("d")).collect()
     return {r["feature"]: (float(r["d"]), *nm[r["feature"]]) for r in rows}
 
 
@@ -794,159 +775,45 @@ def wasserstein_all(
     pooled sorted distinct values — scipy.stats.wasserstein_distance's
     quantile-integral identity on empirical CDFs.
 
-    Same distributed shape as :func:`ks_d_all`: light prescan, then melt
-    -> per-value pre-aggregated side counts (map-side combine; the
-    shuffle carries only distinct values) -> bucket-parallel cumulative
-    windows (:func:`_cdf_cum_frame`, which also carries the cross-bucket
-    boundary gap from the next non-empty bucket's minimum), routed to
-    the equal-mass percentile decomposition above ``bucketed_threshold``
-    distinct values.
+    Same distributed plan and routing as :func:`ks_d_all`
+    (:func:`_cdf_stat_rows`); the frame also carries the next distinct
+    value across bucket boundaries (``with_gap``).
 
     Determinism: each term is rounded to ``quantize`` decimals and summed
     as decimal(38, quantize) — an EXACT, order-independent sum, so the
     result is bit-identical under any layout/parallelism and any
-    window-vs-bucketed routing, and engine-portable (DuckDB reproduces
-    every rounded term from the same doubles; the float-sum-order flake
-    class is structurally impossible).  The <= 0.5e-9 per-term quantum is
+    bucketing, and engine-portable (DuckDB reproduces every rounded term
+    from the same doubles; the float-sum-order flake class is
+    structurally impossible).  The <= 0.5e-9 per-term quantum is
     immaterial for a drift statistic.
 
     Returns {feature: (w1, n_ref, m_test)}; features with no non-null
     values on either side are skipped with a warning (KS convention).
     """
-    if not cols:
-        return {}
-    prescan = _cdf_prescan(ref_df, test_df, cols, bucketed_threshold)
-    nm, fused, big = _cdf_route("wasserstein_all", prescan, bucketed_threshold)
-    ok = set(fused) | set(big)
-    if not ok:
-        return {}
-    u = _melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)).unionByName(
-        _melt(test_df, cols).withColumn("r", F.lit(0)).withColumn("t", F.lit(1))
+    term = F.abs(
+        F.col("cr") / F.col("n") - F.col("ct") / F.col("m")
+    ) * (F.col("nxt") - F.col("value"))
+    nm, ok, rows = _cdf_stat_rows(
+        "wasserstein_all", ref_df, test_df, cols, bucketed_threshold, n_buckets,
+        lambda cum: cum.select(
+            "feature", _w1_term_quantized(term, quantize).alias("term")
+        ).where(F.col("term").isNotNull()).groupBy("feature").agg(
+            F.sum("term").cast("double").alias("w1")
+        ),
+        with_gap=True,
     )
-    g = u.groupBy("feature", "value").agg(
-        F.sum("r").alias("r"), F.sum("t").alias("t")
-    )
-    out: Dict[str, Tuple[float, int, int]] = {}
-    if big:
-        g = g.persist()
-    try:
-        if fused:
-            cum = _cdf_cum_frame(
-                g.where(F.col("feature").isin(fused)), prescan, fused,
-                with_gap=True,
-            )
-            term = F.abs(
-                F.col("cr") / F.col("n") - F.col("ct") / F.col("m")
-            ) * (F.col("nxt") - F.col("value"))
-            scored = cum.select(
-                "feature", _w1_term_quantized(term, quantize).alias("term")
-            ).where(F.col("term").isNotNull())
-            rows = scored.groupBy("feature").agg(
-                F.sum("term").cast("double").alias("w1")
-            ).collect()
-            out.update(
-                {r["feature"]: (float(r["w1"]), *nm[r["feature"]]) for r in rows}
-            )
-        if big:
-            out.update(
-                _w1_bucketed(
-                    g.where(F.col("feature").isin(big)), nm, n_buckets, quantize
-                )
-            )
-        # a feature whose pooled support is ONE distinct value has no gap
-        # rows at all (every lead is null): both samples are the same
-        # constant, W1 = 0 by definition
-        for f in ok - set(out):
-            out[f] = (0.0, *nm[f])
-        return out
-    finally:
-        if big:
-            g.unpersist()
+    out = {r["feature"]: (float(r["w1"]), *nm[r["feature"]]) for r in rows}
+    # a feature whose pooled support is ONE distinct value has no gap
+    # rows at all (every lead is null): both samples are the same
+    # constant, W1 = 0 by definition
+    for f in ok:
+        out.setdefault(f, (0.0, *nm[f]))
+    return out
 
 
 def _w1_term_quantized(term, quantize: int):
     """round(term, q) :: decimal(38, q) — the order-independent summand."""
     return F.round(term, quantize).cast(f"decimal(38,{quantize})")
-
-
-def _w1_bucketed(
-    g: DataFrame, nm: Dict[str, Tuple[int, int]], n_buckets: int, quantize: int
-) -> Dict:
-    """Exact W1 via coarse value-buckets (same decomposition as
-    :func:`_ks_d_bucketed`): within-bucket cumulative windows run
-    ``n_buckets``-way parallel; exact prefix offsets AND the next
-    non-empty bucket's minimum value (the boundary gap) broadcast-join
-    back from one tiny per-bucket aggregate."""
-    import pandas as pd
-
-    spark = g.sparkSession
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    edge_rows = g.groupBy("feature").agg(
-        F.percentile_approx(
-            "value", F.array(*[F.lit(p) for p in probs]), 10_000
-        ).alias("edges")
-    ).collect()
-    bucket = F.lit(0)
-    for r in edge_rows:
-        b = F.lit(0)
-        for e in r["edges"]:
-            b = b + (F.col("value") > F.lit(float(e))).cast("int")
-        bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
-    bucketed = g.withColumn("bkt", bucket)
-
-    offs_rows = bucketed.groupBy("feature", "bkt").agg(
-        F.sum("r").alias("rs"),
-        F.sum("t").alias("ts"),
-        F.min("value").alias("mn"),
-    ).collect()
-    per_feat: Dict[str, list] = {}
-    for r in offs_rows:
-        per_feat.setdefault(r["feature"], []).append(r)
-    offs = []
-    for feat, rows in per_feat.items():
-        rows = sorted(rows, key=lambda x: x["bkt"])
-        roff = toff = 0
-        for i, r in enumerate(rows):
-            nxt = float(rows[i + 1]["mn"]) if i + 1 < len(rows) else None
-            offs.append((feat, int(r["bkt"]), roff, toff, nxt))
-            roff += int(r["rs"])
-            toff += int(r["ts"])
-    # explicit schema (NOT via pandas): the last bucket's next_v must be a
-    # real SQL NULL for coalesce(), not the NaN a float ndarray would carry
-    offs_df = spark.createDataFrame(
-        offs, "feature string, bkt int, roff long, toff long, next_v double"
-    )
-    nm_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(f, n, m) for f, (n, m) in nm.items()], columns=["feature", "n", "m"]
-        )
-    )
-    w_cum = (
-        Window.partitionBy("feature", "bkt")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_ord = Window.partitionBy("feature", "bkt").orderBy("value")
-    pre = bucketed.select(
-        "feature", "bkt", "value",
-        F.sum("r").over(w_cum).alias("lcr"),
-        F.sum("t").over(w_cum).alias("lct"),
-        F.lead("value").over(w_ord).alias("nxt_in"),
-    )
-    term = F.abs(
-        (F.col("lcr") + F.col("roff")) / F.col("n")
-        - (F.col("lct") + F.col("toff")) / F.col("m")
-    ) * (F.coalesce("nxt_in", "next_v") - F.col("value"))
-    scored = (
-        pre.join(F.broadcast(offs_df), ["feature", "bkt"])
-        .join(F.broadcast(nm_df), "feature")
-        .select("feature", _w1_term_quantized(term, quantize).alias("term"))
-        .where(F.col("term").isNotNull())
-    )
-    rows = scored.groupBy("feature").agg(
-        F.sum("term").cast("double").alias("w1")
-    ).collect()
-    return {r["feature"]: (float(r["w1"]), *nm[r["feature"]]) for r in rows}
 
 
 # ---------------------------------------------------------------------------
@@ -984,14 +851,12 @@ def cvm_ad_all(
     integer cancellation that would overflow/lose precision at 10^12
     rows.
 
-    Same distributed shape and determinism contract as
-    :func:`wasserstein_all`: light prescan -> melt -> per-value pre-agg
-    -> bucket-parallel cumulative windows (:func:`_cdf_cum_frame`;
-    equal-mass percentile decomposition above ``bucketed_threshold``
-    distinct values — no boundary gap needed here, only exact prefix
-    offsets), every term rounded to ``quantize`` decimals and summed as
-    decimal(38, quantize) — order-independent, bit-identical under any
-    layout/routing, engine-portable to DuckDB.
+    Same distributed plan, routing and determinism contract as
+    :func:`wasserstein_all` (:func:`_cdf_stat_rows`; no boundary gap
+    needed here, only exact cumulative counts), every term rounded to
+    ``quantize`` decimals and summed as decimal(38, quantize) —
+    order-independent, bit-identical under any layout/bucketing,
+    engine-portable to DuckDB.
 
     ``quantize`` defaults to 18 (not W1's 9): these terms SQUARE the CDF
     gap, so on tie-free continuous data the null per-term magnitude is
@@ -1004,55 +869,25 @@ def cvm_ad_all(
     Returns {feature: (cvm, ad, n_ref, m_test)}; features empty on either
     side are skipped with a warning (KS convention).
     """
-    if not cols:
-        return {}
-    prescan = _cdf_prescan(ref_df, test_df, cols, bucketed_threshold)
-    nm, fused, big = _cdf_route("cvm_ad_all", prescan, bucketed_threshold)
-    if not fused and not big:
-        return {}
-    u = _melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)).unionByName(
-        _melt(test_df, cols).withColumn("r", F.lit(0)).withColumn("t", F.lit(1))
+    cvm, ad = _cvm_ad_terms(
+        F.col("cr"), F.col("ct"),
+        F.col("r"), F.col("t"),
+        F.col("n"), F.col("m"),
+        quantize,
     )
-    g = u.groupBy("feature", "value").agg(
-        F.sum("r").alias("r"), F.sum("t").alias("t")
+    nm, _, rows = _cdf_stat_rows(
+        "cvm_ad_all", ref_df, test_df, cols, bucketed_threshold, n_buckets,
+        lambda cum: cum.select("feature", cvm.alias("cvm"), ad.alias("ad"))
+        .groupBy("feature")
+        .agg(
+            F.sum("cvm").cast("double").alias("cvm"),
+            F.sum("ad").cast("double").alias("ad"),
+        ),
     )
-    out: Dict[str, Tuple[float, float, int, int]] = {}
-    if big:
-        g = g.persist()
-    try:
-        if fused:
-            cum = _cdf_cum_frame(
-                g.where(F.col("feature").isin(fused)), prescan, fused
-            )
-            cvm, ad = _cvm_ad_terms(
-                F.col("cr"), F.col("ct"),
-                F.col("r"), F.col("t"),
-                F.col("n"), F.col("m"),
-                quantize,
-            )
-            rows = (
-                cum.select("feature", cvm.alias("cvm"), ad.alias("ad"))
-                .groupBy("feature")
-                .agg(
-                    F.sum("cvm").cast("double").alias("cvm"),
-                    F.sum("ad").cast("double").alias("ad"),
-                )
-                .collect()
-            )
-            out.update({
-                r["feature"]: (float(r["cvm"]), float(r["ad"]), *nm[r["feature"]])
-                for r in rows
-            })
-        if big:
-            out.update(
-                _cvm_ad_bucketed(
-                    g.where(F.col("feature").isin(big)), nm, n_buckets, quantize
-                )
-            )
-        return out
-    finally:
-        if big:
-            g.unpersist()
+    return {
+        r["feature"]: (float(r["cvm"]), float(r["ad"]), *nm[r["feature"]])
+        for r in rows
+    }
 
 
 def _cvm_ad_terms(cr, ct, rl, tl, n, m, quantize: int):
@@ -1079,86 +914,6 @@ def _cvm_ad_terms(cr, ct, rl, tl, n, m, quantize: int):
         _w1_term_quantized(cvm, quantize),
         _w1_term_quantized(ad, quantize),
     )
-
-
-def _cvm_ad_bucketed(
-    g: DataFrame, nm: Dict[str, Tuple[int, int]], n_buckets: int, quantize: int
-) -> Dict:
-    """Exact CvM/AD via the :func:`_w1_bucketed` decomposition, minus the
-    boundary gap (these statistics have no value-gap factor): within-
-    bucket cumulative windows run ``n_buckets``-way parallel and the
-    exact prefix offsets broadcast back from one tiny per-bucket
-    aggregate."""
-    import pandas as pd
-
-    spark = g.sparkSession
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    edge_rows = g.groupBy("feature").agg(
-        F.percentile_approx(
-            "value", F.array(*[F.lit(p) for p in probs]), 10_000
-        ).alias("edges")
-    ).collect()
-    bucket = F.lit(0)
-    for r in edge_rows:
-        b = F.lit(0)
-        for e in r["edges"]:
-            b = b + (F.col("value") > F.lit(float(e))).cast("int")
-        bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
-    bucketed = g.withColumn("bkt", bucket)
-
-    offs_rows = bucketed.groupBy("feature", "bkt").agg(
-        F.sum("r").alias("rs"), F.sum("t").alias("ts")
-    ).collect()
-    per_feat: Dict[str, list] = {}
-    for r in offs_rows:
-        per_feat.setdefault(r["feature"], []).append(r)
-    offs = []
-    for feat, rows in per_feat.items():
-        rows = sorted(rows, key=lambda x: x["bkt"])
-        roff = toff = 0
-        for r in rows:
-            offs.append((feat, int(r["bkt"]), roff, toff))
-            roff += int(r["rs"])
-            toff += int(r["ts"])
-    offs_df = spark.createDataFrame(
-        offs, "feature string, bkt int, roff long, toff long"
-    )
-    nm_df = spark.createDataFrame(
-        pd.DataFrame(
-            [(f, n, m) for f, (n, m) in nm.items()], columns=["feature", "n", "m"]
-        )
-    )
-    w_cum = (
-        Window.partitionBy("feature", "bkt")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    pre = bucketed.select(
-        "feature", "bkt", "r", "t",
-        F.sum("r").over(w_cum).alias("lcr"),
-        F.sum("t").over(w_cum).alias("lct"),
-    )
-    cvm, ad = _cvm_ad_terms(
-        F.col("lcr") + F.col("roff"), F.col("lct") + F.col("toff"),
-        F.col("r"), F.col("t"),
-        F.col("n"), F.col("m"),
-        quantize,
-    )
-    rows = (
-        pre.join(F.broadcast(offs_df), ["feature", "bkt"])
-        .join(F.broadcast(nm_df), "feature")
-        .select("feature", cvm.alias("cvm"), ad.alias("ad"))
-        .groupBy("feature")
-        .agg(
-            F.sum("cvm").cast("double").alias("cvm"),
-            F.sum("ad").cast("double").alias("ad"),
-        )
-        .collect()
-    )
-    return {
-        r["feature"]: (float(r["cvm"]), float(r["ad"]), *nm[r["feature"]])
-        for r in rows
-    }
 
 
 # ---------------------------------------------------------------------------

@@ -11,13 +11,15 @@ Scale design:
 * PSI is computed ENTIRELY in Spark SQL: one melt+groupBy produces
   (part, feature, bin, side) counts; a dense (part, feature, bin) grid
   left-join restores empty bins (pandas value_counts-over-Categorical
-  parity); clamp → renormalize → sum((a-e)*ln(a/e)) runs as window +
-  aggregate expressions.  Nothing about it collects row data; verdict
-  output is O(parts x features).
-* KS D is the distributed per-value-pre-agg + cumulative-window plan of
-  driftspark.stats, windowed by (feature, part) — each partition's ECDF
-  merge parallelizes across the cluster; p-values for the O(parts x
-  features) D statistics are driver math.
+  parity); clamp → renormalize → sum((a-e)*ln(a/e)) runs as bin-ordered
+  window expressions (:func:`_psi_over_bins`, shared with rolling_psi).
+  Nothing about it collects row data; verdict output is O(parts x
+  features).
+* KS D scores each (part, feature) test group against a reference ECDF
+  fitted once and broadcast (:func:`fit_ks_reference_ecdf`; thinned by
+  mass quantum over the stats cumulative frame when a feature exceeds
+  its point budget); p-values for the O(parts x features) D statistics
+  are driver math.
 * chi-square categorical counts are one groupBy at (part, category, side)
   cardinality.
 """
@@ -38,7 +40,13 @@ from driftspark.numerics import (
     severity_from_psi,
     severity_from_pvalue,
 )
-from driftspark.stats import bucket_expr, quantile_edges
+from driftspark.stats import (
+    _cdf_cum_frame,
+    _melt,
+    _quantile_bucket,
+    bucket_expr,
+    quantile_edges,
+)
 
 logger = logging.getLogger(__name__)
 
@@ -170,11 +178,26 @@ def psi_by_partition(
         .join(test_cnt, ["part", "feature", "bin"], "left")
         .na.fill({"r": 0, "t": 0})
     )
+    return _psi_over_bins(j, ["part", "feature"], min_bin_size)
+
+
+def _psi_over_bins(
+    j: DataFrame,
+    keys: Sequence[str],
+    min_bin_size: float,
+    carry: Sequence[str] = (),
+) -> DataFrame:
+    """(keys..., carry..., psi, n_ref, n_test) — one PSI per ``keys``
+    group of a DENSE (keys..., bin, r, t) count frame: both sides'
+    proportions clamped to ``min_bin_size``, renormalized, and summed as
+    (a-e)*ln(a/e) (psi.py:102-110).  ``carry`` columns must be constant
+    within a group; the row kept is the group's bin 0, which the dense
+    grid guarantees."""
     # every double sum below runs in bin order: an unordered window or a
     # hash aggregate adds in shuffle-arrival order, which moves the last
     # bits of the PSI from run to run and from one input layout to another
     w = (
-        Window.partitionBy("part", "feature")
+        Window.partitionBy(*keys)
         .orderBy("bin")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
@@ -192,9 +215,9 @@ def psi_by_partition(
     e = F.greatest(F.try_divide(F.col("r"), rsum), F.lit(min_bin_size))
     a = F.greatest(F.try_divide(F.col("t"), tsum), F.lit(min_bin_size))
     scored = j.select(
-        "part",
-        "feature",
+        *keys,
         "bin",
+        *carry,
         e.alias("e"),
         a.alias("a"),
         F.sum(e).over(w).alias("esum"),
@@ -204,11 +227,10 @@ def psi_by_partition(
     )
     en = F.col("e") / F.col("esum")
     an = F.col("a") / F.col("asum")
-    # the dense grid gives every (part, feature) a bin 0: keep that row
     return (
         scored.withColumn("psi", F.sum((an - en) * F.log(an / en)).over(w))
         .where(F.col("bin") == 0)
-        .select("part", "feature", "psi", "n_ref", "n_test")
+        .select(*keys, *carry, "psi", "n_ref", "n_test")
     )
 
 
@@ -232,10 +254,12 @@ def rolling_psi(
     bins, so empty bins AND empty buckets participate in the clamp —
     the pandas all-categories semantic) → the trailing reference is a
     per-(feature, bin) window sum over the preceding ``trailing``
-    buckets.  PSI math is verbatim psi_by_partition (clamp to
-    min_bin_size via greatest-over-try_divide, renormalize, sum) — an
-    all-out-of-range or EMPTY bucket scores a ~0 shape drift with
-    n_test = 0 marking it (volume is volume_report's job).
+    buckets.  PSI math is psi_by_partition's own
+    (:func:`_psi_over_bins`: clamp to min_bin_size via
+    greatest-over-try_divide, renormalize, sum in bin order, so the
+    result does not depend on the input layout) — an all-out-of-range
+    or EMPTY bucket scores a ~0 shape drift with n_test = 0 marking it
+    (volume is volume_report's job).
 
     Buckets with fewer than ``min_history`` preceding buckets verdict
     ``insufficient_history``.  Returns (feature, bucket_ts string,
@@ -287,28 +311,7 @@ def rolling_psi(
         .rowsBetween(-trailing, -1)
     )
     dense = dense.withColumn("r", F.coalesce(F.sum("t").over(w_trail), F.lit(0)))
-
-    w = Window.partitionBy("feature", "__b")
-    rsum = F.sum("r").over(w)
-    tsum = F.sum("t").over(w)
-    e = F.greatest(F.try_divide(F.col("r"), rsum), F.lit(min_bin_size))
-    a = F.greatest(F.try_divide(F.col("t"), tsum), F.lit(min_bin_size))
-    scored = dense.select(
-        "feature", "__b", "idx",
-        e.alias("e"), a.alias("a"),
-        F.sum(e).over(w).alias("esum"),
-        F.sum(a).over(w).alias("asum"),
-        rsum.alias("n_trailing"),
-        tsum.alias("n_test"),
-    )
-    en = F.col("e") / F.col("esum")
-    an = F.col("a") / F.col("asum")
-    agg = scored.groupBy("feature", "__b").agg(
-        F.sum((an - en) * F.log(an / en)).alias("psi"),
-        F.first("idx").alias("idx"),
-        F.first("n_trailing").alias("n_trailing"),
-        F.first("n_test").alias("n_test"),
-    )
+    agg = _psi_over_bins(dense, ["feature", "__b"], min_bin_size, carry=["idx"])
     hist = F.least(F.col("idx"), F.lit(trailing))
     sev = F.when(
         hist < F.lit(min_history), F.lit(VERDICT_INSUFFICIENT)
@@ -318,7 +321,7 @@ def rolling_psi(
         F.date_format("__b", "yyyy-MM-dd HH:mm:ss").alias("bucket_ts"),
         "psi",
         F.col("n_test").cast("long").alias("n_test"),
-        F.col("n_trailing").cast("long").alias("n_trailing"),
+        F.col("n_ref").cast("long").alias("n_trailing"),
         hist.cast("long").alias("history"),
         sev.alias("severity"),
         F.when(hist < F.lit(min_history), F.lit(None).cast("boolean"))
@@ -339,87 +342,6 @@ def _severity_from_psi_col(psi):
     )
 
 
-def ks_d_by_partition(
-    ref_df: DataFrame,
-    test_df: DataFrame,
-    cols: Sequence[str],
-    part_col: str = "part",
-) -> DataFrame:
-    """(part, feature, d, n, m) — KS D of each test partition's sample vs
-    the GLOBAL reference sample, distributed.
-
-    The reference ECDF is global, so its per-value counts are computed once
-    and re-ranked inside every (feature, part) window by cross-joining the
-    reference value counts with the partition ids — the window input stays
-    at (distinct values x parts), far below row count."""
-    spark = ref_df.sparkSession
-    structs = lambda df: [  # noqa: E731
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
-        for c in cols
-    ]
-
-    def melt(df, with_part):
-        sel = [F.col(part_col).alias("part")] if with_part else []
-        return (
-            df.select(*sel, F.explode(F.array(*structs(df))).alias("fv"))
-            .select(*(["part"] if with_part else []), "fv.feature", "fv.value")
-            .where(F.col("value").isNotNull() & ~F.isnan("value"))
-        )
-
-    ref_vals = melt(ref_df, False).groupBy("feature", "value").agg(
-        F.count(F.lit(1)).alias("r")
-    )
-    # NULL partition ids belong to no partition: excluded here (the
-    # verdict-suite psi/chi2 paths count and warn about the same rows)
-    parts = (
-        test_df.where(F.col(part_col).isNotNull())
-        .select(F.col(part_col).alias("part"))
-        .distinct()
-    )
-    ref_per_part = ref_vals.crossJoin(F.broadcast(parts)).withColumn("t", F.lit(0))
-    test_vals = (
-        melt(test_df, True)
-        .groupBy("part", "feature", "value")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .withColumn("r", F.lit(0))
-    )
-    u = ref_per_part.select("part", "feature", "value", "r", "t").unionByName(
-        test_vals.select("part", "feature", "value", "r", "t")
-    )
-    g = u.groupBy("part", "feature", "value").agg(
-        F.sum("r").alias("r"), F.sum("t").alias("t")
-    )
-    w_cum = (
-        Window.partitionBy("part", "feature")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_all = Window.partitionBy("part", "feature")
-    # try_divide: the ref cross-join manufactures a (part, feature) group
-    # for EVERY partition, so a partition with no in-range test values for
-    # a feature has sum(t) = 0 — ANSI division would abort the job; the
-    # m = 0 groups are dropped below instead (no data, no verdict)
-    scored = g.select(
-        "part",
-        "feature",
-        F.abs(
-            F.try_divide(F.sum("r").over(w_cum), F.sum("r").over(w_all))
-            - F.try_divide(F.sum("t").over(w_cum), F.sum("t").over(w_all))
-        ).alias("diff"),
-        F.sum("r").over(w_all).alias("n"),
-        F.sum("t").over(w_all).alias("m"),
-    )
-    return (
-        scored.groupBy("part", "feature")
-        .agg(
-            F.max("diff").alias("d"),
-            F.first("n").alias("n"),
-            F.first("m").alias("m"),
-        )
-        .where((F.col("m") > 0) & (F.col("n") > 0))
-    )
-
-
 def w1_by_partition(
     ref_df: DataFrame,
     test_df: DataFrame,
@@ -430,11 +352,11 @@ def w1_by_partition(
     """(part, feature, w1, n, m) — exact Wasserstein-1 of each test
     partition's sample vs the GLOBAL reference sample, distributed.
 
-    Same shape and scale contract as :func:`ks_d_by_partition` (global
-    reference value counts cross-joined with the partition ids, so the
-    per-(part, feature) window input stays at distinct values x parts),
-    plus the W1 value-gap term: |CDF_r - CDF_t| * (next value - value)
-    summed as quantized decimal — order-independent, engine-portable,
+    The global reference value counts are cross-joined with the
+    partition ids, so the per-(part, feature) cumulative window input
+    stays at distinct values x parts, far below row count.  Each term is
+    the W1 value gap |CDF_r - CDF_t| * (next value - value), summed as
+    quantized decimal — order-independent, engine-portable,
     bit-identical under any layout (the wasserstein_all contract).
 
     Partition ids keep their ORIGINAL type; NULL-part rows belong to no
@@ -444,20 +366,7 @@ def w1_by_partition(
     """
     from driftspark.stats import _w1_term_quantized
 
-    structs = lambda df: [  # noqa: E731
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
-        for c in cols
-    ]
-
-    def melt(df, with_part):
-        sel = [F.col(part_col).alias("part")] if with_part else []
-        return (
-            df.select(*sel, F.explode(F.array(*structs(df))).alias("fv"))
-            .select(*(["part"] if with_part else []), "fv.feature", "fv.value")
-            .where(F.col("value").isNotNull() & ~F.isnan("value"))
-        )
-
-    ref_vals = melt(ref_df, False).groupBy("feature", "value").agg(
+    ref_vals = _melt(ref_df, cols).groupBy("feature", "value").agg(
         F.count(F.lit(1)).alias("r")
     )
     parts = (
@@ -467,7 +376,7 @@ def w1_by_partition(
     )
     ref_per_part = ref_vals.crossJoin(F.broadcast(parts)).withColumn("t", F.lit(0))
     test_vals = (
-        melt(test_df, True)
+        _melt(test_df, cols, part_col)
         .groupBy("part", "feature", "value")
         .agg(F.count(F.lit(1)).alias("t"))
         .withColumn("r", F.lit(0))
@@ -518,13 +427,14 @@ def _ref_ecdf_points(
     (feature, value, c) distinct-count frame, with DISTRIBUTED thinning.
 
     Features whose distinct count fits ``max_points`` collect exactly.
-    Larger features never reach the driver unthinned: values are coarsely
-    bucketed by approx-quantile edges (so each feature's cumulative window
-    runs over ``n_buckets`` independent groups — no single-task
-    feature-wide sort), exact within-bucket cumulative counts get their
-    bucket-prefix offsets added via a broadcast join, and a MASS-quantum
-    filter keeps every point whose cumulative count crosses a multiple of
-    ceil(n / max_points) (plus the last point, so n stays exact).
+    Larger features never reach the driver unthinned: they run through
+    the stats cumulative frame (:func:`driftspark.stats._cdf_cum_frame`
+    with r = c, t = 0) over ``n_buckets`` approx-quantile buckets, so
+    each feature's cumulative window runs over independent groups with
+    exact in-plan prefix offsets — no single-task feature-wide sort —
+    and a MASS-quantum filter keeps every point whose cumulative count
+    crosses a multiple of ceil(n / max_points) (plus the last point, so
+    n stays exact).
     Retention is therefore uniform in probability mass, not rank: heavy
     values (zero-inflation, mode spikes) are always retained wherever
     they sit, and the ECDF gap between consecutive retained points is
@@ -532,106 +442,43 @@ def _ref_ecdf_points(
     by 1/max_points regardless of frequency skew.  Retained points carry
     EXACT cumulative counts."""
     # the distinct set feeds 2-4 jobs below (totals, small collect, big
-    # bucketing/offsets/window) — persist so the raw data is scanned once
+    # edges/frame) — persist so the raw data is scanned once
     ref_g = ref_g.persist()
-    totals = ref_g.groupBy("feature").agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("c").alias("n")
-    ).collect()
+    totals = ref_g.groupBy("feature").agg(F.count(F.lit(1)).alias("nd")).collect()
     nd_by_feat = {r["feature"]: int(r["nd"]) for r in totals}
     small = [f for f, nd in nd_by_feat.items() if nd <= max_points]
     big = [f for f, nd in nd_by_feat.items() if nd > max_points]
 
     ecdf: Dict[str, tuple] = {}
-    if small:
-        pdf = ref_g.where(F.col("feature").isin(small)).toPandas()
-        for feat, g in pdf.groupby("feature"):
-            g = g.sort_values("value")
-            vals = g["value"].values.astype(np.float64)
-            cums = np.cumsum(g["c"].values.astype(np.int64))
-            ecdf[feat] = (vals, cums, int(cums[-1]))
-    if not big:
-        ref_g.unpersist()
-        return ecdf
-
-    spark = ref_g.sparkSession
-    bg = ref_g.where(F.col("feature").isin(big))
     try:
-        probs = [i / n_buckets for i in range(1, n_buckets)]
-        edge_rows = bg.groupBy("feature").agg(
-            F.percentile_approx(
-                "value", F.array(*[F.lit(p) for p in probs]), 10_000
-            ).alias("edges")
-        ).collect()
-        bucket = F.lit(0)
-        for r in edge_rows:
-            b = F.lit(0)
-            for e in r["edges"]:
-                b = b + (F.col("value") > F.lit(float(e))).cast("int")
-            bucket = F.when(F.col("feature") == r["feature"], b).otherwise(bucket)
-        bucketed = bg.withColumn("bkt", bucket)
-
-        # bucket prefix offsets (counts + distinct ranks), tiny driver state
-        offs_rows = bucketed.groupBy("feature", "bkt").agg(
-            F.sum("c").alias("cnt"), F.count(F.lit(1)).alias("ndb")
-        ).collect()
-        offs: List[tuple] = []
-        per_feat: Dict[str, list] = {}
-        for r in offs_rows:
-            per_feat.setdefault(r["feature"], []).append(r)
-        for feat, rows in per_feat.items():
-            coff = roff = 0
-            for r in sorted(rows, key=lambda x: x["bkt"]):
-                offs.append((feat, int(r["bkt"]), coff, roff))
-                coff += int(r["cnt"])
-                roff += int(r["ndb"])
-        offs_df = spark.createDataFrame(
-            pd.DataFrame(offs, columns=["feature", "bkt", "coff", "roff"])
+        if small:
+            pdf = ref_g.where(F.col("feature").isin(small)).toPandas()
+            for feat, g in pdf.groupby("feature"):
+                g = g.sort_values("value")
+                vals = g["value"].values.astype(np.float64)
+                cums = np.cumsum(g["c"].values.astype(np.int64))
+                ecdf[feat] = (vals, cums, int(cums[-1]))
+        if not big:
+            return ecdf
+        bg = ref_g.where(F.col("feature").isin(big)).select(
+            "feature", "value", F.col("c").alias("r"), F.lit(0).alias("t")
         )
-
-        w_cum = (
-            Window.partitionBy("feature", "bkt")
-            .orderBy("value")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        cum = _cdf_cum_frame(bg, _quantile_bucket(bg, big, n_buckets), with_gap=True)
+        # keep a point iff its cumulative count crosses a mass quantum
+        # ms = ceil(n / max_points) — floor(cr/ms) > floor((cr - r)/ms) —
+        # plus the exact last point (no next value)
+        ms = F.expr(f"(n + {max_points - 1}) div {max_points}")
+        kept = cum.where(
+            (F.floor(F.col("cr") / ms) > F.floor((F.col("cr") - F.col("r")) / ms))
+            | F.col("nxt").isNull()
         )
-        w_rk = Window.partitionBy("feature", "bkt").orderBy("value")
-        scored = (
-            bucketed.select(
-                "feature", "bkt", "value", "c",
-                F.sum("c").over(w_cum).alias("lcum"),
-                F.row_number().over(w_rk).alias("lrk"),
-            )
-            .join(F.broadcast(offs_df), ["feature", "bkt"])
-            .select(
-                "feature", "value", "c",
-                (F.col("lcum") + F.col("coff")).alias("cum"),
-                (F.col("lrk") + F.col("roff")).alias("rk"),
-            )
-        )
-        n_by_feat = {r["feature"]: int(r["n"]) for r in totals}
-        nd_df = spark.createDataFrame(
-            pd.DataFrame(
-                [
-                    (f, nd_by_feat[f],
-                     max(-(-n_by_feat[f] // max_points), 1))  # ceil(n/max)
-                    for f in big
-                ],
-                columns=["feature", "nd", "mass_stride"],
-            )
-        )
-        # keep a point iff its cumulative count crosses a mass quantum —
-        # floor(cum/ms) > floor((cum - c)/ms) — plus the exact last point
-        ms = F.col("mass_stride")
-        kept = scored.join(F.broadcast(nd_df), "feature").where(
-            (F.floor(F.col("cum") / ms) > F.floor((F.col("cum") - F.col("c")) / ms))
-            | (F.col("rk") == F.col("nd"))
-        )
-        pdf = kept.select("feature", "value", "cum").toPandas()
+        pdf = kept.select("feature", "value", "cr").toPandas()
         for feat, g in pdf.groupby("feature"):
             g = g.sort_values("value")
             ecdf[feat] = (
                 g["value"].values.astype(np.float64),
-                g["cum"].values.astype(np.int64),
-                int(g["cum"].values[-1]),
+                g["cr"].values.astype(np.int64),
+                int(g["cr"].values[-1]),
             )
     finally:
         ref_g.unpersist()
@@ -649,10 +496,12 @@ def ks_d_by_partition_broadcast(
     """(part, feature, d, n, m) — exact KS D per partition via a BROADCAST
     reference ECDF.
 
-    The window formulation (ks_d_by_partition) replicates the reference's
-    distinct values into every partition's window — O(distinct x parts)
-    sort work, which dominated the validation job when a high-cardinality
-    column (phash) met many partitions.  Here the global reference ECDF is
+    A window formulation (cross-join the reference value counts into
+    every partition, cumulative window per (part, feature); the tests
+    keep it as their oracle) replicates the reference's distinct values
+    into every partition's window — O(distinct x parts) sort work, which
+    dominated the validation job when a high-cardinality column (phash)
+    met many partitions.  Here the global reference ECDF is
     aggregated once, collected ({feature: sorted values + cumulative
     counts}), broadcast, and each (part, feature) group's test sample
     evaluates
@@ -667,29 +516,17 @@ def ks_d_by_partition_broadcast(
     distinct_ref).
 
     Thinning happens DISTRIBUTED, before anything reaches the driver: when
-    a feature's distinct-value count exceeds ``max_ref_ecdf_points``, a
-    per-feature cumulative window computes exact (value, cum_count) pairs
-    and an ntile-style rank filter keeps ~max points per feature (always
-    including the last = exact n).  The driver only ever collects
+    a feature's distinct-value count exceeds its share of
+    ``max_ref_ecdf_points``, the bucket-parallel cumulative frame computes
+    exact (value, cum_count) pairs and a mass-quantum filter keeps about
+    that many points (always including the last = exact n; see
+    :func:`_ref_ecdf_points`).  The driver only ever collects
     O(features x max_points) rows — at 10^12 rows the unthinned distinct
     set would not fit on any driver.  Retained points keep their EXACT
     cumulative counts, so the only error is R's value-resolution between
     retained points (<= 1/max_points of mass)."""
     ecdf = fit_ks_reference_ecdf(ref_df, cols, max_ref_ecdf_points)
     return ks_d_against_ecdf(test_df, cols, ecdf, part_col, preaggregate)
-
-
-def _melt_feature_values(df: DataFrame, cols: Sequence[str], part_col=None):
-    structs = [
-        F.struct(F.lit(c).alias("feature"), F.col(c).cast("double").alias("value"))
-        for c in cols
-    ]
-    sel = [F.col(part_col).alias("part")] if part_col else []
-    return (
-        df.select(*sel, F.explode(F.array(*structs)).alias("fv"))
-        .select(*(["part"] if part_col else []), "fv.feature", "fv.value")
-        .where(F.col("value").isNotNull() & ~F.isnan("value"))
-    )
 
 
 def fit_ks_reference_ecdf(
@@ -708,7 +545,7 @@ def fit_ks_reference_ecdf(
     driver memory is bounded regardless of how many columns are
     monitored."""
     ref_g = (
-        _melt_feature_values(ref_df, cols)
+        _melt(ref_df, cols)
         .groupBy("feature", "value")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -801,7 +638,7 @@ def ks_d_against_ecdf(
     # NULL-part rows are excluded like psi/chi2 (which count + warn about
     # them in the verdict suite) — a part=NULL verdict row belongs to no
     # partition; the filter is free (streaming's literal group never is)
-    melted = _melt_feature_values(test_df, cols, part_col).where(
+    melted = _melt(test_df, cols, part_col).where(
         F.col("part").isNotNull()
     )
     if preaggregate:

@@ -76,7 +76,7 @@ def test_cum_frame_exact_cumulative_counts(frames, rows_per_bucket, monkeypatch)
     u = st._melt(ref_df, cols).withColumn("r", F.lit(1)).withColumn("t", F.lit(0)) \
         .unionByName(st._melt(test_df, cols).withColumn("r", F.lit(0)).withColumn("t", F.lit(1)))
     g = u.groupBy("feature", "value").agg(F.sum("r").alias("r"), F.sum("t").alias("t"))
-    cum = st._cdf_cum_frame(g, pres, cols, with_gap=True).toPandas()
+    cum = st._cdf_cum_frame(g, st._uniform_bucket(pres, cols), with_gap=True).toPandas()
     for c in cols:
         sub = cum[cum.feature == c].sort_values("value").reset_index(drop=True)
         rv = np.sort(ref[c].dropna().values)

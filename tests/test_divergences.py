@@ -93,16 +93,28 @@ def test_w1_shift_scale_sanity(spark):
     assert abs(w1 - 3.25) < 1e-6
 
 
+def _outlier_stretched(n_ref, n_test):
+    """drift_tabular's x_outlier shape: a few values at 1e12 stretch the
+    domain so uniform buckets put almost every value in bucket 0."""
+    rng = np.random.default_rng(11)
+    o = np.round(rng.normal(100, 15, n_ref + n_test), 2)
+    o[rng.choice(n_ref + n_test, 5, replace=False)] = 1e12
+    return o[:n_ref], o[n_ref:]
+
+
 def test_w1_layout_and_bucketed_bit_parity(spark, samples):
     x, y, u, v = samples
-    ref, test = _frame(spark, {"a": (x, y), "b": (u, v)})
-    base = wasserstein_all(ref, test, ["a", "b"])
+    ref, test = _frame(
+        spark, {"a": (x, y), "b": (u, v), "o": _outlier_stretched(3000, 2500)}
+    )
+    cols = ["a", "b", "o"]
+    base = wasserstein_all(ref, test, cols)
     # layout invariance: quantized-decimal sum is order-independent
-    relaid = wasserstein_all(ref.repartition(13), test.repartition(7), ["a", "b"])
+    relaid = wasserstein_all(ref.repartition(13), test.repartition(7), cols)
     assert relaid == base
-    # bucketed decomposition (force it) is bit-identical to the window path
+    # approx-quantile buckets (force them) are bit-identical to uniform ones
     bucketed = wasserstein_all(
-        ref, test, ["a", "b"], bucketed_threshold=1, n_buckets=8
+        ref, test, cols, bucketed_threshold=1, n_buckets=8
     )
     assert bucketed == base
 
@@ -307,11 +319,14 @@ def test_cvm_ad_layout_and_bucketed_bit_parity(spark, samples):
     from driftspark.stats import cvm_ad_all
 
     x, y, u, v = samples
-    ref, test = _frame(spark, {"a": (x, y), "b": (u, v)})
-    base = cvm_ad_all(ref, test, ["a", "b"])
-    relaid = cvm_ad_all(ref.repartition(13), test.repartition(7), ["a", "b"])
+    ref, test = _frame(
+        spark, {"a": (x, y), "b": (u, v), "o": _outlier_stretched(3000, 2500)}
+    )
+    cols = ["a", "b", "o"]
+    base = cvm_ad_all(ref, test, cols)
+    relaid = cvm_ad_all(ref.repartition(13), test.repartition(7), cols)
     assert relaid == base
-    bucketed = cvm_ad_all(ref, test, ["a", "b"], bucketed_threshold=1, n_buckets=8)
+    bucketed = cvm_ad_all(ref, test, cols, bucketed_threshold=1, n_buckets=8)
     assert bucketed == base
 
 

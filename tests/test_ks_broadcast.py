@@ -5,7 +5,8 @@ import pytest
 
 from driftspark import numerics as nm
 from driftspark.synth import synth_image_table
-from driftspark.verdicts import ks_d_by_partition, ks_d_by_partition_broadcast
+from driftspark.verdicts import ks_d_by_partition_broadcast
+from ks_window_oracle import ks_d_by_partition
 
 
 def test_broadcast_ks_matches_oracle_and_window(spark):

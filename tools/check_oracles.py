@@ -2,8 +2,11 @@
 entry on Spark and its oracle_sql() on DuckDB at sf0.01, compare row count,
 column-name set, and order-insensitive values exactly."""
 
+import hashlib
+import os
 import sys
 import time
+from itertools import islice
 
 sys.path.insert(0, "/root/repo")
 
@@ -26,9 +29,21 @@ def norm(v):
     return repr(v)
 
 
-def rowset(cols, rows):
+def normalized(cols, rows):
+    """Each row's normalized values, columns in name order."""
     idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(norm(r[i]) for i in idx) for r in rows)
+    for r in rows:
+        yield tuple(norm(r[i]) for i in idx)
+
+
+def digest(nrow):
+    return hashlib.blake2b(repr(nrow).encode(), digest_size=16).digest()
+
+
+def arrow_rows(reader):
+    for batch in reader:
+        for r in batch.to_pylist():
+            yield tuple(r.values())
 
 
 # Spark simpleString dtype -> acceptable pyarrow type names on the DuckDB
@@ -48,9 +63,9 @@ _TYPE_COMPAT = {
 }
 
 
-def type_mismatches(sdf, arrow_table):
+def type_mismatches(sdf, arrow_schema):
     """Pairs (col, spark_type, duck_arrow_type) whose physical types differ."""
-    duck = {f.name: str(f.type) for f in arrow_table.schema}
+    duck = {f.name: str(f.type) for f in arrow_schema}
     bad = []
     for col, styp in sdf.dtypes:
         if col not in duck:
@@ -61,9 +76,19 @@ def type_mismatches(sdf, arrow_table):
     return bad
 
 
+#: DuckDB runs in this process beside the Spark driver JVM (8 GB heap by
+#: default): the limit makes a large oracle spill to disk instead of
+#: growing past the host's memory
+DUCKDB_MEMORY_LIMIT = "3GB"
+DUCKDB_TEMP_DIR = ".duckdb_tmp"
+
+
 def main():
     spark = get_spark(master="local[8]", shuffle_partitions=16)
-    con = duckdb.connect()
+    con = duckdb.connect(config={
+        "memory_limit": DUCKDB_MEMORY_LIMIT,
+        "temp_directory": os.path.abspath(DUCKDB_TEMP_DIR),
+    })
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
 
@@ -76,36 +101,42 @@ def main():
         t0 = time.time()
         sdf = fn(spark, SF_DIR)
         scols = sdf.columns
-        srows = [tuple(r) for r in sdf.collect()]
+        srows = sdf.collect()
         took = time.time() - t0
         if name not in oq:
             print(f"[rows-only] {name}: {len(srows)} rows, {took:.1f}s")
             continue
         res = con.sql(oq[name])
         dcols = [d[0] for d in res.description]
-        atab = res.arrow()
-        drows = [tuple(r.values()) for r in atab.to_pylist()]
+        reader = res.fetch_arrow_reader()
+        bad_types = type_mismatches(sdf, reader.schema)
+        # sorted 16-byte digests of the normalized rows: equal lists mean
+        # equal order-insensitive row multisets (up to a 2^-128 collision)
+        # without holding the rows of both engines — sf0.1 jaccard_pairs
+        # returns 11M rows from each
+        sdig = sorted(map(digest, normalized(scols, srows)))
+        del srows
+        ddig = sorted(map(digest, normalized(dcols, arrow_rows(reader))))
         ok_cols = sorted(scols) == sorted(dcols)
-        ok_count = len(srows) == len(drows)
-        sset, dset = rowset(scols, srows), rowset(dcols, drows)
-        ok_vals = sset == dset
-        bad_types = type_mismatches(sdf, atab)
+        ok_count = len(sdig) == len(ddig)
+        ok_vals = sdig == ddig
         status = "OK" if (ok_cols and ok_count and ok_vals and not bad_types) else "FAIL"
         print(
-            f"[{status}] {name}: spark={len(srows)} duck={len(drows)} "
+            f"[{status}] {name}: spark={len(sdig)} duck={len(ddig)} "
             f"cols={'ok' if ok_cols else (scols, dcols)} vals={'ok' if ok_vals else 'MISMATCH'} "
             f"types={'ok' if not bad_types else bad_types} {took:.1f}s"
         )
         if status == "FAIL":
             fails.append(name)
-            for i, (a, b) in enumerate(zip(sset, dset)):
-                if a != b:
-                    print("   first diff:", a, "vs", b)
-                    break
-            if len(sset) != len(dset):
-                onlys = set(sset) - set(dset)
-                onlyd = set(dset) - set(sset)
-                print("   only-spark:", list(onlys)[:2], "only-duck:", list(onlyd)[:2])
+            onlys, onlyd = set(sdig) - set(ddig), set(ddig) - set(sdig)
+            srows = sdf.toLocalIterator()
+            drows = arrow_rows(con.sql(oq[name]).fetch_arrow_reader())
+            print(
+                "   only-spark:",
+                list(islice((r for r in normalized(scols, srows) if digest(r) in onlys), 2)),
+                "only-duck:",
+                list(islice((r for r in normalized(dcols, drows) if digest(r) in onlyd), 2)),
+            )
     print("FAILURES:", fails if fails else "none")
     return 1 if fails else 0
 
